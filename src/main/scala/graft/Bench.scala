@@ -1,16 +1,84 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"failed":[...],"heap_max_mb":M,"sf":...}`.
   *
   * Uses the `noop` sink so the full result (including JSON serialization
   * and nested arrays) is materialized — a bare `count()` would let Catalyst
   * prune the expensive projections and under-report.
+  *
+  * A query that throws is a failure, never a time: its row reads `null`,
+  * its name is listed under `failed`, it adds nothing to the totals, and
+  * the process exits 1 after printing the JSON.
   */
 object Bench {
+
+  /** One timed row: the min over the runs, or `None` when any run threw. */
+  private[graft] final case class Timed(name: String, sec: Option[Double], gcMs: Long)
+
+  /** Load average per core above which a run is labelled contended. */
+  private val ContendedLoadPerCore = 0.5
+
+  /** Times each query `runs` times through the noop sink, min of the runs,
+    * with the session cache cleared between runs (only JIT/codegen warmth
+    * carries over). A run that throws makes the whole row a failure.
+    */
+  private[graft] def timeQueries(
+      spark: SparkSession,
+      sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      runs: Int
+  ): Seq[Timed] = {
+    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+    def gcMs(): Long = {
+      var t = 0L
+      gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime))
+      t
+    }
+    queries.map { case (name, fn) =>
+      val gc0 = gcMs()
+      val times = (0 until runs).map { _ =>
+        val t0 = System.nanoTime()
+        // release any eager localCheckpoint blocks the plan carries
+        // (dedup signature/verified frames) even when the write fails:
+        // clearCache() only clears CacheManager entries, not RDD-level
+        // checkpoint storage, so a leak here accumulates across
+        // 40+ queries × runs
+        var df: DataFrame = null
+        val ok =
+          try {
+            df = fn(spark, sfDir)
+            df.write.mode("overwrite").format("noop").save()
+            true
+          } catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+              false
+          } finally {
+            if (df != null)
+              try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(df)
+              catch { case _: Throwable => () }
+          }
+        val dt = (System.nanoTime() - t0) / 1e9
+        spark.catalog.clearCache() // per-query caches must not skew the next timing
+        if (ok) Some(dt) else None
+      }
+      Timed(name, if (times.forall(_.isDefined)) Some(times.flatten.min) else None, gcMs() - gc0)
+    }
+  }
+
+  /** The per-query map, sorted by name; a failed row is `null`. */
+  private[graft] def queriesJson(rs: Seq[Timed]): String = rs
+    .sortBy(_.name)
+    .map(r => "\"" + r.name + "\":" + r.sec.fold("null")(v => f"$v%.3f"))
+    .mkString("{", ",", "}")
+
+  private[graft] def failedJson(rs: Seq[Timed]): String =
+    rs.filter(_.sec.isEmpty).map(_.name).sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -38,8 +106,7 @@ object Bench {
     try SparkEntry.queries.get("q_count").foreach { q => q(spark, sfDir).count(); () }
     catch { case _: Throwable => () }
 
-    // min of 3 runs per query (standard cold-start noise reduction; the
-    // cache is cleared between runs so only JIT/codegen warmth carries over)
+    // min of 3 runs per query (standard cold-start noise reduction)
     val runs = math.max(
       1,
       scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt).getOrElse(3)
@@ -54,10 +121,17 @@ object Bench {
         java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage)
     val loadBefore = loadAvg()
     // act on the self-labeling, don't just record it: a contended run's
-    // per-query mins drift 2-10x and read as regressions (round-6 verdict)
-    if (loadBefore > 1.5)
+    // per-query mins drift 2-10x and read as regressions (round-6 verdict).
+    // The load average counts runnable threads machine-wide, so the
+    // threshold scales with the machine's cores.
+    val cores = Runtime.getRuntime.availableProcessors
+    // the heap this run had (-Xmx): heap size alone moves short rows by
+    // several x, so captures are comparable only at the same heap
+    val heapMaxMb = Runtime.getRuntime.maxMemory / (1L << 20)
+    if (loadBefore > ContendedLoadPerCore * cores)
       System.err.println(
-        f"[bench] WARNING: load_before=$loadBefore%.2f > 1.5 — this run is CONTENDED; " +
+        f"[bench] WARNING: load_before=$loadBefore%.2f > ${ContendedLoadPerCore * cores}%.1f " +
+          s"($ContendedLoadPerCore per core × $cores) — this run is CONTENDED; " +
           "re-run on a quiet machine before committing its numbers"
       )
     // Verification-only plans stay in SparkEntry.queries (they are oracle
@@ -114,60 +188,20 @@ object Bench {
     // (and skips the throughput metrics) for quick regression bisection
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // sf1 capture-drift instruments (the dual-capture protocol's open
-    // question: back-to-back full-set rows drift up to 2.7×): per-query GC
-    // time is always recorded (attribution — a row whose wall time moves
-    // with its GC delta is heap-state noise, not engine cost), and
-    // SPARK_GRAFT_BENCH_SETTLE=1 additionally forces a full GC + settle
-    // pause before each query (the hypothesis test — if settling collapses
-    // the drift, the drift is JVM heap/GC accumulation across the sequence)
-    val settle = sys.env.get("SPARK_GRAFT_BENCH_SETTLE").contains("1")
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def gcMs(): Long = {
-      var t = 0L
-      gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime))
-      t
-    }
-    val gcPerQuery = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val results = SparkEntry.queries.toSeq
-      .filterNot(q => benchExcluded(q._1))
-      .filter(q => only.forall(_.contains(q._1)))
-      .sortBy(_._1)
-      .map { case (name, fn) =>
-      if (settle) { System.gc(); Thread.sleep(200) }
-      val gc0 = gcMs()
-      val times = (0 until runs).map { _ =>
-        val t0 = System.nanoTime()
-        // release any eager localCheckpoint blocks the plan carries
-        // (dedup signature/verified frames) even when the write fails:
-        // clearCache() only clears CacheManager entries, not RDD-level
-        // checkpoint storage, so a leak here accumulates across
-        // 40+ queries × runs
-        var df: org.apache.spark.sql.DataFrame = null
-        try {
-          df = fn(spark, sfDir)
-          df.write.mode("overwrite").format("noop").save()
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        } finally {
-          if (df != null)
-            try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(df)
-            catch { case _: Throwable => () }
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache() // per-query caches must not skew the next timing
-        dt
-      }
-      gcPerQuery(name) = gcMs() - gc0
-      name -> times.min
-    }
-    def queriesJson(rs: Seq[(String, Double)]): String = rs
-      .sortBy(_._1)
-      .map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
+    // per-query GC time is recorded for attribution: a row whose wall
+    // time moves with its GC delta is heap-state noise, not engine cost
+    val results = timeQueries(
+      spark,
+      sfDir,
+      SparkEntry.queries.toSeq
+        .filterNot(q => benchExcluded(q._1))
+        .filter(q => only.forall(_.contains(q._1)))
+        .sortBy(_._1),
+      runs)
+    val timed = results.collect { case Timed(name, Some(sec), _) => name -> sec }
+    val failed = failedJson(results)
     val qs = queriesJson(results)
-    val total = results.map(_._2).sum
+    val total = timed.map(_._2).sum
 
     // Digest line sizing: the driver's stdout tail window is 2000 chars and
     // sbt's "[success] Total time: …" footer (~70 chars) lands after the
@@ -187,7 +221,7 @@ object Bench {
       val head =
         f"""{"metric":"total","value":$value%.3f,"value_common":$valueCommon%.3f,"unit":"sec","queries":{"""
       def tail(omitted: Int) =
-        s"""},"queries_omitted":$omitted,"queries_full":"BENCH_LOCAL.json"$extras,"sf":"$sf"}"""
+        s"""},"queries_omitted":$omitted,"queries_full":"BENCH_LOCAL.json","failed":$failed$extras,"sf":"$sf"}"""
       val entries = rs.sortBy { case (k, v) => (-v, k) }
         .map { case (k, v) => "\"" + k + f"\":$v%.2f" }
       val fixed = head.length + tail(entries.size).length
@@ -218,6 +252,8 @@ object Bench {
     // AND written to the file — nothing is removed from the full line).
     // The digest is the only complete JSON object inside the tail window,
     // which is what makes the driver's parse succeed.
+    //
+    // Any failed row makes the process exit 1 once both lines are out.
     def emit(json: String, digest: Option[String] = None): Unit = {
       val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
       try java.nio.file.Files.write(
@@ -230,12 +266,13 @@ object Bench {
       // only when the full line cannot fit the tail window itself
       digest.filter(_ => json.length > DigestBudget).foreach(println)
       System.out.flush()
+      if (results.exists(_.sec.isEmpty)) sys.exit(1)
     }
 
     if (only.isDefined) {
       emit(
-        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runs,"load_before":$loadBefore%.2f,"load_after":${loadAvg()}%.2f,"sf":"$sfDir"}""",
-        digest = Some(digestJson(results, total, total, "", sfDir)))
+        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"runs":$runs,"heap_max_mb":$heapMaxMb,"load_before":$loadBefore%.2f,"load_after":${loadAvg()}%.2f,"sf":"$sfDir"}""",
+        digest = Some(digestJson(timed, total, total, "", sfDir)))
       return
     }
 
@@ -320,10 +357,10 @@ object Bench {
     Layout.keyPartitionedWrite(load("orders"), "o_orderkey", 16384, s"$pdir/orders")
     Layout.keyPartitionedWrite(load("lineitem"), "l_orderkey", 16384, s"$pdir/lineitem")
     Layout.keyPartitionedWrite(load("customer"), "c_custkey", 2048, s"$pdir/customer")
-    // memoized relations (the ProfileCdc rationale): partition discovery on
-    // a many-directory tree is paid per spark.read.parquet CALL, and the
-    // engine loads each table several times per batch — one relation per
-    // table per run, as a production session would hold
+    // memoized relations: partition discovery on a many-directory tree is
+    // paid per spark.read.parquet CALL, and the engine loads each table
+    // several times per batch — one relation per table per run, as a
+    // production session would hold
     val ploadCache = scala.collection.mutable.Map.empty[String, org.apache.spark.sql.DataFrame]
     val pload: String => org.apache.spark.sql.DataFrame = t =>
       ploadCache.getOrElseUpdate(t, t match {
@@ -378,7 +415,7 @@ object Bench {
       pengine.process(cchanges, Lineage.empty(spark)).write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t4) / 1e9
     }.min
-    val timedQs = queriesJson(results :+ ("q_cdc_partitioned" -> cdcPartSec))
+    val timedQs = queriesJson(results :+ Timed("q_cdc_partitioned", Some(cdcPartSec), 0L))
     val timedTotal = total + cdcPartSec
 
     // `value` = everything timed this round (including rows appended after
@@ -386,13 +423,13 @@ object Bench {
     // so cross-round totals stay comparable when a round appends a new
     // timed row (appending changed `value`'s composition in r14 and made
     // the raw trend line unreadable without judge-side recomputation)
-    val gcJson = gcPerQuery.map { case (k, v) => "\"" + k + s"\":$v" }.mkString("{", ",", "}")
+    val gcJson = results.map(r => "\"" + r.name + s"\":${r.gcMs}").mkString("{", ",", "}")
     val headlines =
       f""","snapshot_docs_per_sec":$snapshotDocsSec%.0f,"snapshot_docs_per_sec_bucketed":$snapshotBucketedSec%.0f,"incremental_changes_per_sec":$changesSec%.0f,"incremental_changes_per_sec_partitioned":$changesPartSec%.0f"""
     emit(
-      f"""{"metric":"total","value":$timedTotal%.3f,"value_common":$total%.3f,"unit":"sec","queries":$timedQs,"gc_ms":$gcJson,"settle":$settle$headlines,"runs":$runs,"load_before":$loadBefore%.2f,"load_after":${loadAvg()}%.2f,"sf":"$sfDir"}""",
+      f"""{"metric":"total","value":$timedTotal%.3f,"value_common":$total%.3f,"unit":"sec","queries":$timedQs,"failed":$failed,"gc_ms":$gcJson$headlines,"runs":$runs,"heap_max_mb":$heapMaxMb,"load_before":$loadBefore%.2f,"load_after":${loadAvg()}%.2f,"sf":"$sfDir"}""",
       digest = Some(digestJson(
-        results :+ ("q_cdc_partitioned" -> cdcPartSec), timedTotal, total, headlines, sfDir))
+        timed :+ ("q_cdc_partitioned" -> cdcPartSec), timedTotal, total, headlines, sfDir))
     )
   }
 }

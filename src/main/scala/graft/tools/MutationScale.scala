@@ -179,15 +179,8 @@ object MutationScale {
       graft.streaming.ClusterStream.seed(cBase, cSig, cMap, "doc_id", "text", cModel))
     def cAssign(): Long = graft.dedup.ClusterMap.assignments(spark, cMap).count()
     cAssign() // untimed warm-up, as above
-    // per-stage attribution inside the apply (shingle / probe / candidates /
-    // verify / merge / append): the stage forcing points are frames the
-    // apply caches or checkpoints anyway, so the sum tracks the consumer
-    // total and each stage's 10x-corpus ratio is its own scale signal
-    val cStages = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val (cApply, _) = time(
-      graft.streaming.ClusterStream.applyBatch(
-        spark, cBatch, docs, cSig, cMap, "doc_id", "text",
-        stageTimer = Some((label, sec) => { cStages(label) = sec; () })))
+      graft.streaming.ClusterStream.applyBatch(spark, cBatch, docs, cSig, cMap, "doc_id", "text"))
     val cAssignSec = minOf3(cAssign())
     val (cReplay, _) = time(
       graft.streaming.ClusterStream.applyBatch(spark, cBatch, docs, cSig, cMap, "doc_id", "text"))
@@ -222,8 +215,7 @@ object MutationScale {
         f""""compact_sec":$pqCompact%.3f,"probe_after_compact_sec":$pqProbeAfter%.3f},""" +
         s""""recall_at50":$recallJson,""" +
         f""""cluster":{"seed_sec":$cSeed%.3f,"apply_batch10_sec":$cApply%.3f,"assignments_sec":$cAssignSec%.3f,""" +
-        f""""replay_batch10_sec":$cReplay%.3f,"compact_sec":$cCompact%.3f,"assignments_after_compact_sec":$cAssignAfter%.3f,""" +
-        s""""apply_stages":{${cStages.map { case (k, v) => f""""$k":$v%.3f""" }.mkString(",")}}}}"""
+        f""""replay_batch10_sec":$cReplay%.3f,"compact_sec":$cCompact%.3f,"assignments_after_compact_sec":$cAssignAfter%.3f}}"""
     out.foreach { p =>
       val w = new java.io.PrintWriter(p)
       try w.println(json) finally w.close()

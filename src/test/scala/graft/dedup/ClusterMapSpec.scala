@@ -291,4 +291,63 @@ class ClusterMapSpec extends SparkSpec {
     assert(asMap(ClusterMap.resolve(spark, path, idsDf(5L, 10L))) ==
       Map(5L -> 5L, 10L -> 5L))
   }
+
+  /** Ids of the RDDs currently holding storage blocks. */
+  private def storedRdds(): Set[Int] =
+    spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  test("the CC label frame is released every batch when the CC runs its distributed loop") {
+    val path = graft.util.TempDirs.scratch("cmap-label-leak").toString
+    ClusterMap.init(spark, path, buckets = 4)
+    val before = storedRdds()
+    // ccInMemPairs = 0 forces the distributed CC loop, whose result is a
+    // checkpoint-pinned frame; each batch merges into the previous ones
+    (0L until 4L).foreach { b =>
+      val base = b * 10L
+      ClusterMap.applyBatch(
+        spark, path,
+        pairsDf((base, base + 1L), (base + 1L, base + 2L), (base + 2L, base - 8L)),
+        idsDf(base, base + 1L, base + 2L),
+        ccInMemPairs = 0)
+      val kept = storedRdds() -- before
+      assert(kept.isEmpty, s"batch $b left cached RDDs $kept")
+    }
+    // the four batches chain into one component rooted at the foreign -8
+    val got = asMap(ClusterMap.assignments(spark, path))
+    assert(got.size == 12 && got.values.toSet == Set(-8L))
+  }
+
+  test("the distributed tier (> 65 536 endpoints) and a fused bridging batch reproduce the batch CC") {
+    val path = graft.util.TempDirs.scratch("cmap-distributed").toString
+    ClusterMap.init(spark, path, buckets = 4)
+    // 14 000 chains of 5 ids: 70 000 endpoints, past the 65 536-endpoint
+    // driver ceiling, so the first batch takes the distributed tier; chains
+    // are shallow (diameter 4), so the distributed CC loop converges
+    val chains = 14000L
+    val bigPairs = spark.range(chains * 5L)
+      .filter(col("id") % 5L =!= 4L)
+      .select(col("id").as("id_a"), (col("id") + 1L).as("id_b"))
+    val bigIds = spark.range(chains * 5L).select(col("id"))
+    val bridge = Seq((1000000L, 12L), (1000000L, 37L), (1000001L, 5000L), (1000001L, 1000000L))
+    val bridgeIds = idsDf(1000000L, 1000001L, 1000002L)
+    assert(bigPairs.select(col("id_a").as("id")).union(bigPairs.select(col("id_b").as("id")))
+      .distinct().count() > 65536L)
+
+    def expected(pairs: DataFrame, ids: DataFrame): Map[Long, Long] = {
+      val cc = asMap(Dedup.connectedComponents(pairs).select(col("id"), col("keep_id")))
+      ids.collect().map(r => r.getLong(0)).map(i => i -> cc.getOrElse(i, i)).toMap
+    }
+    val before = storedRdds()
+    // distributed tier with the distributed CC loop too (ccInMemPairs = 0)
+    ClusterMap.applyBatch(spark, path, bigPairs, bigIds, ccInMemPairs = 0)
+    assert(storedRdds() -- before == Set.empty[Int])
+    assert(asMap(ClusterMap.assignments(spark, path)) == expected(bigPairs, bigIds))
+    // a small bridging batch on top goes through the fused tier and merges
+    // three stored chains with the new ids
+    ClusterMap.applyBatch(spark, path, pairsDf(bridge: _*), bridgeIds)
+    assert(storedRdds() -- before == Set.empty[Int])
+    val got = asMap(ClusterMap.assignments(spark, path))
+    assert(got == expected(bigPairs.union(pairsDf(bridge: _*)), bigIds.union(bridgeIds)))
+    assert(got(1000001L) == 10L && got(5004L) == 10L && got(1000002L) == 1000002L)
+  }
 }

@@ -350,4 +350,53 @@ class SyncPipelineSpec extends SparkSpec {
     assert(SyncPipeline.changeRows(
       foreign, load, "t", "id", Seq("text"), inSetThreshold = 0).count() == 0)
   }
+
+  test("applyBatch labels each surface's jobs with its `pipeline apply: <surface>` description") {
+    // the job descriptions are the contract a listener-based trace reads to
+    // charge work to a surface: renaming one silently zeroes its metrics
+    val dir = Files.createTempDirectory("graft-pipeline-labels").toString
+    @volatile var notes: Seq[(Long, String, Array[Float])] = (1L to 4L).map(note)
+    val load: String => DataFrame = { case "note" => notes.toDF("id", "text", "embedding") }
+    val cat = Catalog(Map("note" -> TableMeta("note", Seq("id"))))
+    val schema = """{"database":"db","index":"notes","nodes":{"table":"note","columns":["id","text"]}}"""
+    val sync = GraftSync(spark, schema, cat, load, s"$dir/docs-index")
+    val pipeline = new SyncPipeline(
+      sync, load, "note", "id",
+      Seq(
+        SyncPipeline.Bm25Consumer(s"$dir/bm25", "text", buckets = 8),
+        SyncPipeline.AnnLshConsumer(s"$dir/ann-lsh", "embedding", planes = 6, dim = 16),
+        SyncPipeline.AnnPqConsumer(s"$dir/ann-pq", "embedding", nlists = 2, m = 4, codeK = 4),
+        SyncPipeline.DedupConsumer(s"$dir/dedup", "text", _ => ()),
+        SyncPipeline.ClusterConsumer(
+          s"$dir/cluster", s"$dir/cluster-sig", "text", sigBuckets = 8, mapBuckets = 8)
+      ),
+      s"$dir/ckpt"
+    )
+    pipeline.seed()
+    notes = (2L to 6L).map(note)
+    val batch = Seq(
+      ("DELETE", "note", """{"id": 1}""", null, 1L),
+      ("INSERT", "note", null, """{"id": 5}""", 2L),
+      ("INSERT", "note", null, """{"id": 6}""", 3L)
+    ).toDF("tg_op", "tbl", "old", "new", "txid")
+
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      pipeline.applyBatch(batch)
+      val want = Seq("docs", "bm25", "ann_lsh", "ann_pq", "dedup", "cluster")
+        .map(n => s"pipeline apply: $n").toSet
+      // listener events arrive asynchronously; wait for the bus to deliver
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!want.forall(seen.contains) && System.nanoTime() < deadline) Thread.sleep(50)
+      val labelled = seen.toArray(Array.empty[String]).toSet.filter(_.startsWith("pipeline apply: "))
+      assert(labelled == want)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
+  }
 }
